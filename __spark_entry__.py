@@ -1346,7 +1346,7 @@ FROM t WHERE vr = 1 GROUP BY query_id
 # string band keys / literal hyperplanes) so DuckDB can recompute the
 # IDENTICAL pair sets; the plan shape (shuffles, joins, aggregation
 # pattern) is the same as the xxhash64 production defaults, which the
-# bench times separately (see *_prod twins + BENCH_ALIASES in bench.py).
+# constant-oracle gates (minhash_prod_gate, simhash_prod_gate) grade.
 
 
 def q_minhash_near_dups(spark, sf):
@@ -1355,20 +1355,6 @@ def q_minhash_near_dups(spark, sf):
     verify), every stage recomputable by the DuckDB oracle below."""
     return minhash_near_dups(_td(spark, sf), col="text", id_col="doc_id",
                              threshold=0.3, hash="md5_64", bucket="key").df
-
-
-def q_minhash_near_dups_prod(spark, sf):
-    """Production defaults (xxhash64 + murmur band buckets): identical
-    plan, fastest hash — the variant bench.py times as
-    "minhash_near_dups".  NOT a registry entry: LSH candidate recall is
-    hash-family-dependent and PROBABILISTIC for borderline pairs (at
-    j=0.3 with 8 bands x 4 rows the collision probability is ~6%), so no
-    fixed pair-set oracle can hold at every SF — the round-7 sf0.1 sweep
-    disproved the earlier "full recall at this SF" assumption by finding
-    one borderline pair (255 vs 256).  The production path is graded by
-    q_minhash_prod_gate's SF-independent invariants instead."""
-    return minhash_near_dups(_td(spark, sf), col="text",
-                             id_col="doc_id", threshold=0.3).df
 
 
 def q_minhash_prod_gate(spark, sf):
@@ -1505,13 +1491,6 @@ def q_simhash(spark, sf):
     identical 16-bit signature)."""
     return add_simhash(_td(spark, sf), col="text", bits=16,
                        id_col="doc_id", hash="md5_64").df
-
-
-def q_simhash_prod(spark, sf):
-    """Production xxhash64 variant — identical plan (explode → per-bit
-    SUM aggregates), the one bench.py times as "simhash"."""
-    return add_simhash(_td(spark, sf), col="text", bits=16,
-                       id_col="doc_id").df
 
 
 def _simhash_oracle_sql(bits=16):
@@ -7103,12 +7082,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_join_events": q_interval_join_events,
         "rolling_window": q_rolling_window,
         "rolling_time_window": q_rolling_time_window,
-        # simhash_prod / ivf_topk_kmeans (the r1-r5 rows-only residents)
-        # are no longer registry entries: their xxhash64 / k-means||
-        # outputs have no SQL replay, so they now grade through the HARD
-        # constant-oracle gates above (simhash_prod_gate,
-        # ivf_kmeans_recall_gate) which drive the same production code
-        # paths; bench.py still times the raw queries directly.
+        # the xxhash64 simhash and ivf_topk_kmeans are not registry
+        # entries: their xxhash64 / k-means|| outputs have no SQL replay,
+        # so they grade through the HARD constant-oracle gates above
+        # (simhash_prod_gate, ivf_kmeans_recall_gate) which drive the
+        # same production code paths.
         "slice_minmax": q_slice_minmax,
         "tpch_q5": q_tpch_q5,
         "tpch_q6": q_tpch_q6,

@@ -737,13 +737,15 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
         return SparkTbl(newd), SparkTbl(newd.select(*cols, id_col, "n_dups"))
     store_df = store.df if isinstance(store, SparkTbl) else store
     # the snapshot's self-dedup aggregate feeds both merge branches plus
-    # the kept-rows semi join — truncate its lineage once (snapshot-
-    # sized, NOT store-sized) so the agg shuffle runs once, not three
-    # times.  The STORE is deliberately never cached: its two branch
-    # scans are pushdown-pruned IO (isnull/isnotnull reach the parquet
-    # scan) and, bucketed, exchange-free — cheaper than materializing a
-    # corpus-sized table per merge.
-    newd = newd.localCheckpoint()
+    # the kept-rows semi join — cache it (snapshot-sized, NOT
+    # store-sized) so the agg shuffle runs once, not three times.  It is
+    # a pinned persist, not a localCheckpoint, so release() and
+    # release_all_pins() can free it.  The STORE is deliberately never
+    # cached: its two branch scans are pushdown-pruned IO
+    # (isnull/isnotnull reach the parquet scan) and, bucketed,
+    # exchange-free — cheaper than materializing a corpus-sized table
+    # per merge.
+    newd = newd.persist()
     new_keys = newd.select(*cols, id_col, "n_dups")
 
     any_null = None
@@ -777,7 +779,7 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
                           lambda a, b: a.eqNullSafe(b))
     merged = m_nn.unionByName(m_nul)
     kept = newd.join(f_nn.unionByName(f_nul), id_col, "left_semi")
-    return SparkTbl(kept), SparkTbl(merged)
+    return SparkTbl(kept).pin(newd), SparkTbl(merged).pin(newd)
 
 
 def minhash_near_dups_incremental(

@@ -2,12 +2,23 @@
 nest, unnest, expand, complete, pivot_longer, pivot_wider, bind_rows.
 
 Spark-first implementations (reference semantics from
-siuba/dply/verbs.py:1919-2543 and siuba/experimental/pivot/*):
-wide→long uses an explode of an array of structs (one shuffle-free
-projection); long→wide uses ``groupBy().pivot()`` (Spark's native pivot
-does map-side partial aggregation).  ``pivot_wider``/``spread`` must learn
-the distinct key values first — the reference has the same constraint
-(sql_pivot_wide.py:31-38); we cap the collected spec to guard the driver.
+siuba/dply/verbs.py:1919-2543 and siuba/experimental/pivot/*).  Both pivot
+directions run on one internal spec core each, as tidyr's pivots do:
+
+* long: ``[(source column, {names_to part: value})]`` from
+  ``_longer_spec_pairs``; ``_pivot_longer_impl`` turns it into an explode
+  of an array of structs (one shuffle-free projection).  ``pivot_longer``,
+  ``pivot_longer_spec`` and ``gather`` feed it.
+* wide: ``[(output name, value column, key parts)]`` from ``_wider_spec``
+  over the key rows of ``_wider_rows``; ``_pivot_build`` turns it into
+  ``groupBy(ids).pivot(key, keys).agg(...)`` (Spark's native pivot does
+  map-side partial aggregation).  ``pivot_wider``, ``build_wider_spec``,
+  ``pivot_wider_spec``, ``spread`` and ``crosstab`` feed it.
+
+The wide spec needs the distinct key values first — the reference has the
+same constraint (sql_pivot_wide.py:31-38); ``_capped_distinct`` is the one
+driver-side collect, capped at ``MAX_PIVOT_KEYS`` to guard the driver
+(``one_hot`` and ``unnest_wider`` reuse it).
 """
 
 from __future__ import annotations
@@ -66,17 +77,9 @@ def gather(tbl: SparkTbl, key: str = "key", value: str = "value", *args,
     measure = resolve_measure_names(args, tbl.columns) if args else [
         c for c in tbl.columns if c not in tbl.group_by
     ]
-    ids = [c for c in tbl.columns if c not in measure]
-    vtype = _common_value_type(tbl.df, measure)
-    pairs = F.array(*[
-        F.struct(F.lit(c).alias(key), F.col(c).cast(vtype).alias(value))
-        for c in measure
-    ])
-    df = (tbl.df
-          .withColumn("__kv", F.explode(pairs))
-          .select(*ids, F.col("__kv")[key].alias(key), F.col("__kv")[value].alias(value)))
-    if drop_na:
-        df = df.filter(F.col(value).isNotNull())
+    spec = [(c, {key: c}) for c in measure]
+    df = _pivot_longer_impl(tbl, spec, (key,), value, drop_na,
+                            names_repair="minimal").df
     if isinstance(convert, str):
         # explicit target dtype: fully lazy, no probe job
         df = df.withColumn(value, F.col(value).try_cast(convert))
@@ -127,18 +130,110 @@ def _bq(name):
     return F.col("`" + str(name).replace("`", "``") + "`")
 
 
-def _distinct_keys(df, col):
-    """Collect the pivot spec (the reference also requires a collected spec,
+def _capped_distinct(df):
+    """The distinct rows of ``df`` as tuples: the one driver-side collect of
+    a wide spec (the reference also requires a collected spec,
     sql_pivot_wide.py:31-38).  The caller should ``persist`` the input
     first — the spec scan and the pivot itself otherwise each recompute the
     full upstream plan."""
-    rows = df.select(col).distinct().limit(MAX_PIVOT_KEYS + 1).collect()
+    rows = df.distinct().limit(MAX_PIVOT_KEYS + 1).collect()
     if len(rows) > MAX_PIVOT_KEYS:
         raise TranslationError(
             f"pivot spec exceeds {MAX_PIVOT_KEYS} distinct keys; pivoting "
             "that wide is a driver hazard — aggregate first"
         )
-    return sorted([r[0] for r in rows], key=lambda v: (v is None, str(v)))
+    return [tuple(r) for r in rows]
+
+
+def _pivot_key(parts, names_sep):
+    """The value Spark pivots on for one spec row: the key itself, or for
+    several names_from columns their ``concat_ws`` join (``_pivot_build``),
+    which skips NULL parts."""
+    if len(parts) == 1:
+        return parts[0]
+    return names_sep.join(_key_str(p) for p in parts if p is not None)
+
+
+def _wider_rows(df, names_from, names_sep="_", levels=None, expand=False):
+    """The key-part tuples of a wide spec, in output order: sorted by the
+    pivot key's string with NULL last, or by factor ``levels`` of a single
+    names_from column (unknown values follow, string-sorted, like tidyr on
+    a factor).  ``expand`` takes the cartesian product of each names_from
+    column's values (reference: expand() over name_data,
+    pivot_wide.py:486-488)."""
+    def order(parts):
+        k = _pivot_key(parts, names_sep)
+        return (k is None, str(k))
+
+    if expand and len(names_from) > 1:
+        from itertools import product
+        per_col = [sorted(_capped_distinct(df.select(c)), key=order)
+                   for c in names_from]
+        rows = [sum(combo, ()) for combo in product(*per_col)]
+        if len(rows) > MAX_PIVOT_KEYS:
+            raise TranslationError(
+                f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
+        return rows
+    rows = sorted(_capped_distinct(df.select(*names_from)), key=order)
+    if levels is not None:
+        pos = {v: i for i, v in enumerate(levels)}
+        rows.sort(key=lambda r: (r[0] is None, pos.get(r[0], len(pos)),
+                                 str(r[0])))
+    return rows
+
+
+def _wider_spec(rows, values_from, names_prefix="", names_sep="_",
+                names_glue=None, names_vary="fastest"):
+    """The internal wide-pivot spec: ``[(output name, value column, key
+    parts)]`` in output-column order, one entry per value column and key
+    row.  Names and order follow ``pivot_wider``'s docstring; every key
+    part is named by ``_key_str``, the name Spark's pivot gives it."""
+    many = len(values_from) > 1
+
+    def name(v, parts):
+        strs = [_key_str(p) for p in parts]
+        if names_glue is not None and len(parts) + (1 if many else 0) > 1:
+            if many:
+                return names_glue.format(variable=v, value=strs[0])
+            return names_glue.format(variable=strs[0], value=strs[1])
+        key = _key_str(_pivot_key(parts, names_sep))
+        return f"{names_prefix}{v}{names_sep}{key}" if many \
+            else f"{names_prefix}{key}"
+
+    pairs = ([(v, p) for v in values_from for p in rows]
+             if names_vary == "fastest"
+             else [(v, p) for p in rows for v in values_from])
+    return [(name(v, p), v, p) for v, p in pairs]
+
+
+def _pivot_build(df, ids, names_from, spec, aggs, names_sep="_"):
+    """The one wide-pivot builder: ``spec`` becomes ``groupBy(ids).pivot(key,
+    keys).agg(...)`` with ``aggs`` (value column → aggregate Column), its
+    columns renamed to the spec's names and selected in spec order.
+    Several names_from columns pivot on their ``concat_ws`` join."""
+    out = [n for n, _v, _p in spec]
+    if len(set(out)) != len(out):
+        raise ValueError(
+            f"pivot_wider output names are not unique: {out} "
+            "(names_repair='check_unique', the reference default)")
+    key = names_from[0]
+    if len(names_from) > 1:
+        key = "__pw_key"
+        df = df.withColumn(key, F.concat_ws(names_sep, *names_from))
+    keys = list(dict.fromkeys(_pivot_key(p, names_sep) for _n, _v, p in spec))
+    df = df.groupBy(*ids).pivot(key, keys).agg(
+        *[a.alias(v) for v, a in aggs.items()])
+
+    # Spark names a pivot column "<key>", or "<key>_<value>" for several
+    # aggregates
+    def pivoted(v, parts):
+        k = _key_str(_pivot_key(parts, names_sep))
+        return f"{k}_{v}" if len(aggs) > 1 else k
+
+    rename = {pivoted(v, p): n for n, v, p in spec}
+    df = df.withColumnsRenamed({k: n for k, n in rename.items() if k != n})
+    # backtick-escape: ids/keys containing '.' must not parse as struct refs
+    return df.select(*[_bq(c) for c in ids + out])
 
 
 @verb
@@ -149,14 +244,12 @@ def spread(tbl: SparkTbl, key, value, fill=None, sep: str | None = None,
     valc = _colname(value)
     ids = [c for c in tbl.columns if c not in (keyc, valc)]
     base = tbl.df.persist()
-    keys = _distinct_keys(base, keyc)
-    tbl = tbl.evolve(df=base)
-    out_names = [f"{keyc}{sep}{_key_str(k)}" if sep else _key_str(k) for k in keys]
-    df = tbl.df.groupBy(*ids).pivot(keyc, keys).agg(F.first(valc, ignorenulls=True))
-    if sep:
-        df = df.withColumnsRenamed(dict(zip([_key_str(k) for k in keys], out_names)))
+    spec = [(f"{keyc}{sep}{_key_str(p[0])}" if sep else _key_str(p[0]),
+             valc, p) for p in _wider_rows(base, [keyc])]
+    df = _pivot_build(base, ids, [keyc], spec,
+                      {valc: F.first(valc, ignorenulls=True)})
     if fill is not None:
-        df = df.fillna(fill, subset=out_names)
+        df = df.fillna(fill, subset=[n for n, _v, _p in spec])
     return tbl.evolve(df=df).pin(base)
 
 
@@ -438,7 +531,7 @@ def one_hot(tbl: SparkTbl, col, prefix: str | None = None,
     values get all-zeros like pandas ``dummy_na=False``."""
     name = _colname(col)
     base = tbl.df.persist()
-    keys = [k for k in _distinct_keys(base, name) if k is not None]
+    keys = [p[0] for p in _wider_rows(base, [name]) if p[0] is not None]
     if drop_first:
         keys = keys[1:]
     pre = f"{prefix}_" if prefix else f"{name}_"
@@ -765,104 +858,15 @@ def pivot_wider(tbl: SparkTbl, id_cols=None, names_from="name",
 
     names_from = _pivot_sel(names_from)
     values_from = _pivot_sel(values_from)
-    if id_cols is None:
-        ids = [c for c in tbl.columns if c not in names_from + values_from]
-    else:
-        ids = resolve_names(id_cols if isinstance(id_cols, (list, tuple)) else [id_cols],
-                            tbl.columns)
-    if isinstance(values_fn, dict):
-        missing = [v for v in values_from if v not in values_fn]
-        if missing:
-            raise ValueError(f"values_fn dict is missing entries for {missing}")
-        fn_for = {v: _agg_fn(values_fn[v]) for v in values_from}
-    else:
-        fn_for = {v: _agg_fn(values_fn) for v in values_from}
-
-    if len(names_from) == 1:
-        work = tbl.df.persist()
-        keys = _distinct_keys(work, names_from[0])
-        # a names_from column with declared factor levels orders the
-        # widened columns by LEVEL ORDER, like tidyr on a factor
-        # (functions/cat.py ledger); unknown values follow, string-sorted
-        meta = tbl.factors.get(names_from[0])
-        if meta is not None and meta.levels is not None:
-            pos = {v: i for i, v in enumerate(meta.levels)}
-            keys.sort(key=lambda k: (k is None, pos.get(k, len(pos)), str(k)))
-        # one name part per key: (key,)
-        parts_by_key = {_key_str(k): (_key_str(k),) for k in keys}
-    else:
-        work = tbl.df.withColumn(
-            "__pw_key", F.concat_ws(names_sep, *names_from)).persist()
-        if names_expand:
-            # cartesian product of each names_from column's levels
-            # (reference: expand() over name_data, pivot_wide.py:486-488)
-            from itertools import product
-            per_col = [_distinct_keys(work, c) for c in names_from]
-            combos = list(product(*per_col))
-            if len(combos) > MAX_PIVOT_KEYS:
-                raise TranslationError(
-                    f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
-            keys = [names_sep.join(str(p) for p in combo) for combo in combos]
-            parts_by_key = {k: tuple(str(p) for p in combo)
-                            for k, combo in zip(keys, combos)}
-        else:
-            # one spec scan collects the joined key AND its parts (needed
-            # by names_glue) together
-            rows = (work.select("__pw_key", *names_from).distinct()
-                    .limit(MAX_PIVOT_KEYS + 1).collect())
-            if len(rows) > MAX_PIVOT_KEYS:
-                raise TranslationError(
-                    f"pivot spec exceeds {MAX_PIVOT_KEYS} distinct keys; pivoting "
-                    "that wide is a driver hazard — aggregate first")
-            rows.sort(key=lambda r: (r[0] is None, str(r[0])))
-            keys = [r[0] for r in rows]
-            parts_by_key = {_key_str(r[0]): tuple(str(p) for p in r[1:]) for r in rows}
-        work = work.drop(*names_from)
-    key_strs = [_key_str(k) for k in keys]
-
-    def tidy_name(ks, v=None):
-        parts = parts_by_key[ks]
-        n_parts = len(parts) + (1 if v is not None else 0)
-        if names_glue is not None and n_parts > 1:
-            if v is not None:
-                return names_glue.format(variable=v, value=parts[0])
-            return names_glue.format(variable=parts[0],
-                                     value=parts[1] if len(parts) > 1 else "")
-        if v is not None:
-            return f"{names_prefix}{v}{names_sep}{ks}"
-        return f"{names_prefix}{ks}"
-
-    key_name = names_from[0] if len(names_from) == 1 else "__pw_key"
-    if len(values_from) == 1:
-        v0 = values_from[0]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(fn_for[v0](F.col(v0)))
-        rename = {ks: tidy_name(ks) for ks in key_strs}
-        out_names = [rename[ks] for ks in key_strs]
-        rename = {k: v for k, v in rename.items() if k != v}
-    else:
-        aggs = [fn_for[v](F.col(v)).alias(v) for v in values_from]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(*aggs)
-        # spark names these "<key>_<value>"; tidyr uses "<value>_<key>".
-        # names_vary="fastest" (default): names_from varies fastest, i.e.
-        # value-major column order; "slowest" is key-major.
-        rename = {}
-        out_names = []
-        outer, inner = ((values_from, key_strs) if names_vary == "fastest"
-                        else (key_strs, values_from))
-        for a in outer:
-            for b in inner:
-                v, ks = (a, b) if names_vary == "fastest" else (b, a)
-                tidy = tidy_name(ks, v)
-                rename[f"{ks}_{v}"] = tidy
-                out_names.append(tidy)
-    if len(set(out_names)) != len(out_names):
-        raise ValueError(
-            f"pivot_wider output names are not unique: {out_names} "
-            "(names_repair='check_unique', the reference default)")
-    if rename:
-        df = df.withColumnsRenamed(rename)
-    # backtick-escape: ids/keys containing '.' must not parse as struct refs
-    df = df.select(*[_bq(c) for c in ids], *[_bq(c) for c in out_names])
+    ids = _id_cols(tbl, id_cols, names_from, values_from)
+    fn_for = _fns_for(values_fn, values_from)
+    work = tbl.df.persist()
+    spec = _wider_spec(
+        _wider_rows(work, names_from, names_sep, _factor_levels(tbl, names_from),
+                    names_expand),
+        values_from, names_prefix, names_sep, names_glue, names_vary)
+    df = _pivot_build(work, ids, names_from, spec,
+                      {v: fn_for[v](F.col(v)) for v in values_from}, names_sep)
     if id_expand and ids:
         # complete the id grid (cartesian product of per-id levels) and
         # sort by ids, like the reference's expand() path (pivot_wide.py:320+)
@@ -873,8 +877,31 @@ def pivot_wider(tbl: SparkTbl, id_cols=None, names_from="name",
         df = grid.join(df, ids, "left")
         df = df.orderBy(*ids)
     if values_fill is not None:
-        df = df.fillna(values_fill, subset=out_names)
+        df = df.fillna(values_fill, subset=[n for n, _v, _p in spec])
     return SparkTbl(df, pins=tbl.pins + (work,))
+
+
+def _factor_levels(tbl, names_from):
+    """Declared factor levels of a single names_from column (functions/cat.py
+    ledger): they order the widened columns like tidyr on a factor."""
+    meta = tbl.factors.get(names_from[0]) if len(names_from) == 1 else None
+    return None if meta is None else meta.levels
+
+
+def _fns_for(values_fn, values_from):
+    if isinstance(values_fn, dict):
+        missing = [v for v in values_from if v not in values_fn]
+        if missing:
+            raise ValueError(f"values_fn dict is missing entries for {missing}")
+        return {v: _agg_fn(values_fn[v]) for v in values_from}
+    return {v: _agg_fn(values_fn) for v in values_from}
+
+
+def _id_cols(tbl, id_cols, names_from, values_from):
+    if id_cols is None:
+        return [c for c in tbl.columns if c not in names_from + values_from]
+    return resolve_names(id_cols if isinstance(id_cols, (list, tuple)) else [id_cols],
+                         tbl.columns)
 
 
 @verb
@@ -883,40 +910,23 @@ def build_wider_spec(tbl: SparkTbl, names_from="name", values_from="value",
                      names_glue: str | None = None):
     """Spec-level wide-pivot API (reference: pivot_wide.py:438-527): a
     pandas DataFrame with ``.name`` (output column), ``.value`` (source
-    value column) and the names_from part columns, names_from varying
-    fastest.  EAGER: collects the distinct names_from rows (bounded by
-    MAX_PIVOT_KEYS) — the reference needs the data for this too."""
+    value column) and the names_from part columns, one row per output
+    column of ``pivot_wider`` with the same arguments, in its order.  The
+    part columns hold the key values as they are (object dtype, so NULL
+    keys stay None).  EAGER: collects the distinct names_from rows
+    (bounded by MAX_PIVOT_KEYS) — the reference needs the data for this
+    too."""
     import pandas as pd
 
     names_from = [_colname(names_from)] if not isinstance(names_from, (list, tuple)) \
         else [_colname(c) for c in names_from]
     values_from = [_colname(values_from)] if not isinstance(values_from, (list, tuple)) \
         else [_colname(c) for c in values_from]
-    rows = (tbl.df.select(*names_from).distinct()
-            .limit(MAX_PIVOT_KEYS + 1).collect())
-    if len(rows) > MAX_PIVOT_KEYS:
-        raise TranslationError(
-            f"pivot spec exceeds {MAX_PIVOT_KEYS} distinct keys")
-    rows.sort(key=lambda r: tuple((v is None, str(v)) for v in r))
-    out = []
-    for v in values_from:
-        for r in rows:
-            parts = tuple(str(p) for p in r)
-            key = names_sep.join(parts)
-            if names_glue is not None and (len(values_from) > 1 or len(names_from) > 1):
-                if len(values_from) > 1:
-                    name = names_glue.format(variable=v, value=parts[0])
-                else:
-                    name = names_glue.format(
-                        variable=parts[0],
-                        value=parts[1] if len(parts) > 1 else "")
-            elif len(values_from) > 1:
-                name = f"{names_prefix}{v}{names_sep}{key}"
-            else:
-                name = f"{names_prefix}{key}"
-            out.append({".name": name, ".value": v,
-                        **dict(zip(names_from, r))})
-    return pd.DataFrame(out)
+    spec = _wider_spec(
+        _wider_rows(tbl.df, names_from, names_sep, _factor_levels(tbl, names_from)),
+        values_from, names_prefix, names_sep, names_glue)
+    return pd.DataFrame([{".name": n, ".value": v, **dict(zip(names_from, p))}
+                         for n, v, p in spec], dtype=object)
 
 
 @verb
@@ -924,49 +934,23 @@ def pivot_wider_spec(tbl: SparkTbl, spec, id_cols=None, values_fill=None,
                      values_fn="max", names_sep: str = "_"):
     """Pivot wide according to a (possibly user-edited) spec frame from
     ``build_wider_spec`` — only the keys listed in the spec become columns,
-    named exactly by ``.name`` (reference: pivot_wide.py:283-430)."""
+    named exactly by ``.name``, in the spec's row order (reference:
+    pivot_wide.py:283-430)."""
     import pandas as pd
 
     spec = pd.DataFrame(spec)
     names_from = [c for c in spec.columns if c not in (".name", ".value")]
     values_from = list(pd.unique(spec[".value"]))
-    if id_cols is None:
-        ids = [c for c in tbl.columns if c not in names_from + values_from]
-    else:
-        ids = resolve_names(id_cols if isinstance(id_cols, (list, tuple)) else [id_cols],
-                            tbl.columns)
-    if isinstance(values_fn, dict):
-        fn_for = {v: _agg_fn(values_fn[v]) for v in values_from}
-    else:
-        fn_for = {v: _agg_fn(values_fn) for v in values_from}
-
-    if len(names_from) == 1:
-        work = tbl.df
-        key_name = names_from[0]
-        key_of = lambda r: str(r[key_name])  # noqa: E731
-    else:
-        key_name = "__pw_key"
-        work = tbl.df.withColumn(key_name, F.concat_ws(names_sep, *names_from)) \
-            .drop(*names_from)
-        key_of = lambda r: names_sep.join(str(r[c]) for c in names_from)  # noqa: E731
-    keys = sorted({key_of(r) for r in spec.to_dict("records")})
-
-    if len(values_from) == 1:
-        v0 = values_from[0]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(fn_for[v0](F.col(v0)))
-        rename = {key_of(r): r[".name"] for r in spec.to_dict("records")}
-    else:
-        aggs = [fn_for[v](F.col(v)).alias(v) for v in values_from]
-        df = work.groupBy(*ids).pivot(key_name, keys).agg(*aggs)
-        rename = {f"{key_of(r)}_{r['.value']}": r[".name"]
-                  for r in spec.to_dict("records")}
-    out_names = list(rename.values())
-    df = df.withColumnsRenamed({k: v for k, v in rename.items() if k != v})
-    # spec may deliberately omit keys the pivot produced — drop those
-    keep = ids + out_names
-    df = df.select(*[c for c in df.columns if c in keep])
+    ids = _id_cols(tbl, id_cols, names_from, values_from)
+    fn_for = _fns_for(values_fn, values_from)
+    # a NULL key read back from a numeric frame column is NaN
+    entries = [(r[".name"], r[".value"],
+                tuple(None if pd.isna(r[c]) else r[c] for c in names_from))
+               for r in spec.to_dict("records")]
+    df = _pivot_build(tbl.df, ids, names_from, entries,
+                      {v: fn_for[v](F.col(v)) for v in values_from}, names_sep)
     if values_fill is not None:
-        df = df.fillna(values_fill, subset=out_names)
+        df = df.fillna(values_fill, subset=[n for n, _v, _p in entries])
     return SparkTbl(df)
 
 
@@ -991,14 +975,15 @@ def crosstab(tbl: SparkTbl, row, col, values=None, aggfunc: str = "count",
     discipline as pivot_wider."""
     rowc = _colname(row)
     colc = _colname(col)
-    base = tbl.df.persist()
-    keys = [k for k in _distinct_keys(base, colc) if k is not None]
-    agg = _agg_fn(aggfunc)(F.col(_colname(values))) if values is not None \
+    valc = _colname(values) if values is not None else "n"
+    agg = _agg_fn(aggfunc)(F.col(valc)) if values is not None \
         else F.count(F.lit(1))
-    df = (base.groupBy(rowc).pivot(colc, keys).agg(agg))
-    out_names = [_key_str(k) for k in keys]
+    base = tbl.df.persist()
+    spec = [(_key_str(p[0]), valc, p) for p in _wider_rows(base, [colc])
+            if p[0] is not None]
+    df = _pivot_build(base, [rowc], [colc], spec, {valc: agg})
     if fill is not None:
-        df = df.fillna(fill, subset=out_names)
+        df = df.fillna(fill, subset=[n for n, _v, _p in spec])
     return tbl.evolve(df=df, group_by=()).pin(base)
 
 
@@ -1181,16 +1166,9 @@ def unnest_wider(tbl: SparkTbl, col, names_sep: str | None = None):
                for f in dt.fields]
         return tbl.evolve(df=tbl.df.select(*others, *new))
     if isinstance(dt, T.MapType):
-        rows = (tbl.df.select(F.explode(F.map_keys(F.col(name)))
-                              .alias("__k"))
-                .distinct().orderBy("__k")
-                .limit(MAX_PIVOT_KEYS + 1).collect())
-        if len(rows) > MAX_PIVOT_KEYS:
-            raise ValueError(
-                f"unnest_wider: map column {name!r} has more than "
-                f"{MAX_PIVOT_KEYS} distinct keys — widen explicitly or "
-                "unnest_longer instead")
-        keys = [r["__k"] for r in rows]
+        # map keys are never NULL and share one type: plain sort
+        keys = sorted(r[0] for r in _capped_distinct(
+            tbl.df.select(F.explode(F.map_keys(F.col(name))))))
         new = [F.element_at(F.col(name), F.lit(k)).alias(f"{pre}{k}")
                for k in keys]
         return tbl.evolve(df=tbl.df.select(*others, *new))

@@ -264,6 +264,25 @@ def test_build_wider_spec_and_pivot_wider_spec(spark):
     out2 = (t >> pivot_wider_spec(edited)).df.toPandas()
     assert sorted(out2.columns) == ["id", "only_x"]
     assert sorted(out2["only_x"]) == [1, 3]
+    # the spec path names and fills columns exactly like pivot_wider for
+    # NULL, boolean and dotted (1.5) keys, and for a NULL part of a
+    # two-column key (pivot_wider joins parts with concat_ws, which skips
+    # NULLs)
+    for k in ([1.5, None, 1.5], [True, False, True], [1.5, 2.5, 1.5]):
+        t = data_frame(spark, id=[1, 1, 2], k=k, v=[10, 20, 30])
+        direct = (t >> pivot_wider(names_from=_.k, values_from=_.v)).df
+        spec = build_wider_spec(t, names_from="k", values_from="v")
+        via_spec = (t >> pivot_wider_spec(spec)).df
+        assert via_spec.columns == direct.columns
+        assert sorted(via_spec.collect()) == sorted(direct.collect())
+    t = data_frame(spark, id=[1, 1, 2], a=["x", "x", "y"],
+                   b=["u", None, "u"], v=[10, 20, 30])
+    direct = (t >> pivot_wider(names_from=["a", "b"], values_from=_.v)).df
+    spec = build_wider_spec(t, names_from=["a", "b"], values_from="v")
+    via_spec = (t >> pivot_wider_spec(spec)).df
+    assert direct.columns == ["id", "x", "x_u", "y_u"]
+    assert via_spec.columns == direct.columns
+    assert sorted(via_spec.collect()) == sorted(direct.collect())
 
 
 def test_pivot_longer_names_transform(spark):
@@ -377,7 +396,8 @@ def test_entry_path_releases_pins(spark):
     release_all_pins()
     base = spark.sparkContext._jsc.getPersistentRDDs().size()
     qs = entry.queries()
-    for name in ("spread_wide", "pivot_wider", "minhash_near_dups"):
+    for name in ("spread_wide", "pivot_wider", "minhash_near_dups",
+                 "exact_dedup_incremental"):
         qs[name](spark, "/root/testdata/sf0.001").write.format(
             "noop").mode("overwrite").save()
     release_all_pins()

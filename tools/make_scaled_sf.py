@@ -1,8 +1,8 @@
-"""Synthesize an sf1-equivalent (default 10x sf0.1) copy of EVERY bench
-table so the driver-contract bench can be run at a scale where data
+"""Synthesize an sf1-equivalent (default 10x sf0.1) copy of EVERY registry
+table so the registry queries can be run at a scale where data
 parallelism, not the per-query driver floor, dominates (VERDICT r12
-item 6: at sf0.1 the 8-core bench BEATS 32 cores — geomean c8/c32 0.93
-— so nothing about operator parallelism is measurable there).
+item 6: at sf0.1 8 cores BEAT 32 cores — geomean c8/c32 0.93 — so
+nothing about operator parallelism is measurable there).
 
     python tools/make_scaled_sf.py [mult] [sf_dir] [out_dir]
 
@@ -17,12 +17,10 @@ embedding vectors are deterministically re-mixed per copy (component
 rotation + copy-keyed sign flips) so cross-copy cosines are not ~1 and
 pair-generating ops scale by data size, not copies^2.
 
-Usage with the bench (the driver contract env vars):
+Then check registry queries against their DuckDB oracles at that scale
+(``--only`` picks a subset and leaves CORRECTNESS_local.json alone):
 
-    SPARK_GRAFT_SF_DIR=/tmp/siuba_sf1_synth SPARK_GRAFT_CPUS=32 \
-        python bench.py          # -> BENCH_scaling_c32.json (rename)
-    SPARK_GRAFT_SF_DIR=/tmp/siuba_sf1_synth SPARK_GRAFT_CPUS=8 \
-        python bench.py          # -> BENCH_scaling_c8.json
+    python tools/oracle_sweep.py /tmp/siuba_sf1_synth --only name1,name2
 """
 
 from __future__ import annotations
