@@ -696,6 +696,12 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
       ``GROUP BY cols → (min(id), count(*))`` over the full corpus —
       the graded equivalence (``exact_dedup_incremental`` entry).
 
+    Consume ``new_store`` first (``write_parquet``), then ``kept``: with a
+    store passed in, both read one cached self-dedup of the snapshot,
+    which ``kept``'s ``collect``/``write_*`` frees (``release_all_pins()``
+    frees it if ``kept`` is never consumed).  Consumed the other way
+    round, the store's two merge branches recompute that aggregate.
+
     Contract: ids are globally unique and monotone across snapshots
     (append-only corpus), so the store's representative id is always the
     global min.  Only ``keep='min'`` is supported: the cross-snapshot
@@ -738,10 +744,11 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
     store_df = store.df if isinstance(store, SparkTbl) else store
     # the snapshot's self-dedup aggregate feeds both merge branches plus
     # the kept-rows semi join — cache it (snapshot-sized, NOT
-    # store-sized) so the agg shuffle runs once, not three times.  It is
-    # a pinned persist, not a localCheckpoint, so release() and
-    # release_all_pins() can free it.  The STORE is deliberately never
-    # cached: its two branch scans are pushdown-pruned IO
+    # store-sized) so the agg shuffle runs once, not three times.  The
+    # cache is a persist pinned on ``kept`` only, not a localCheckpoint:
+    # release() and release_all_pins() can free it, and writing the store
+    # first leaves it in place for ``kept``.  The STORE is deliberately
+    # never cached: its two branch scans are pushdown-pruned IO
     # (isnull/isnotnull reach the parquet scan) and, bucketed,
     # exchange-free — cheaper than materializing a corpus-sized table
     # per merge.
@@ -779,7 +786,7 @@ def exact_dedup_incremental(tbl: SparkTbl, store=None, cols=("text",),
                           lambda a, b: a.eqNullSafe(b))
     merged = m_nn.unionByName(m_nul)
     kept = newd.join(f_nn.unionByName(f_nul), id_col, "left_semi")
-    return SparkTbl(kept).pin(newd), SparkTbl(merged).pin(newd)
+    return SparkTbl(kept).pin(newd), SparkTbl(merged)
 
 
 def minhash_near_dups_incremental(

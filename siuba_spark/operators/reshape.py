@@ -9,11 +9,12 @@ directions run on one internal spec core each, as tidyr's pivots do:
   ``_longer_spec_pairs``; ``_pivot_longer_impl`` turns it into an explode
   of an array of structs (one shuffle-free projection).  ``pivot_longer``,
   ``pivot_longer_spec`` and ``gather`` feed it.
-* wide: ``[(output name, value column, key parts)]`` from ``_wider_spec``
-  over the key rows of ``_wider_rows``; ``_pivot_build`` turns it into
-  ``groupBy(ids).pivot(key, keys).agg(...)`` (Spark's native pivot does
-  map-side partial aggregation).  ``pivot_wider``, ``build_wider_spec``,
-  ``pivot_wider_spec``, ``spread`` and ``crosstab`` feed it.
+* wide: ``[(output name, value column, key parts, pivot key)]`` from
+  ``_wider_spec`` over the key rows of ``_wider_rows``; ``_pivot_build``
+  turns it into ``groupBy(ids).pivot(key, keys).agg(...)`` (Spark's
+  native pivot does map-side partial aggregation).  ``pivot_wider``,
+  ``build_wider_spec``, ``pivot_wider_spec``, ``spread`` and ``crosstab``
+  feed it.
 
 The wide spec needs the distinct key values first — the reference has the
 same constraint (sql_pivot_wide.py:31-38); ``_capped_distinct`` is the one
@@ -24,6 +25,7 @@ driver-side collect, capped at ``MAX_PIVOT_KEYS`` to guard the driver
 from __future__ import annotations
 
 import re
+from itertools import product
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -112,16 +114,11 @@ def _agg_fn(fn):
 
 
 def _key_str(k):
-    """The column name Spark's pivot gives a key value: Scala toString —
-    None → 'null', booleans lowercase.  Using str() here broke NULL and
-    boolean keys (the rename/select targeted nonexistent columns)."""
+    """A key value's part of an output column name: str(), but NULL is
+    'null' and booleans are lowercase, as Spark's pivot names them."""
     if k is None:
         return "null"
-    if k is True:
-        return "true"
-    if k is False:
-        return "false"
-    return str(k)
+    return str(k).lower() if isinstance(k, bool) else str(k)
 
 
 def _bq(name):
@@ -145,36 +142,39 @@ def _capped_distinct(df):
     return [tuple(r) for r in rows]
 
 
-def _pivot_key(parts, names_sep):
-    """The value Spark pivots on for one spec row: the key itself, or for
-    several names_from columns their ``concat_ws`` join (``_pivot_build``),
-    which skips NULL parts."""
-    if len(parts) == 1:
-        return parts[0]
-    return names_sep.join(_key_str(p) for p in parts if p is not None)
-
-
 def _wider_rows(df, names_from, names_sep="_", levels=None, expand=False):
-    """The key-part tuples of a wide spec, in output order: sorted by the
-    pivot key's string with NULL last, or by factor ``levels`` of a single
-    names_from column (unknown values follow, string-sorted, like tidyr on
-    a factor).  ``expand`` takes the cartesian product of each names_from
-    column's values (reference: expand() over name_data,
-    pivot_wide.py:486-488)."""
-    def order(parts):
-        k = _pivot_key(parts, names_sep)
-        return (k is None, str(k))
+    """The key rows of a wide spec, ``(key, parts)`` in output order.
+    ``key`` is what Spark pivots on: the names_from value, or for several
+    columns the ``concat_ws`` string of the parts (NULL parts skipped),
+    collected from Spark with them — Python's str() of a float or a
+    timestamp can differ from Spark's cast (10000000.0 vs 1.0E7), and a
+    pivot value that differs matches no row.  Rows sort by the key's
+    string with NULL last, or by factor ``levels`` of a single names_from
+    column (unknown values follow, string-sorted, like tidyr on a factor).
+    ``expand`` takes the cartesian product of each names_from column's
+    values (reference: expand() over name_data, pivot_wide.py:486-488)."""
+    def order(row):
+        return (row[0] is None, str(row[0]))
 
-    if expand and len(names_from) > 1:
-        from itertools import product
-        per_col = [sorted(_capped_distinct(df.select(c)), key=order)
+    if len(names_from) == 1:
+        rows = [(r[0], r) for r in _capped_distinct(df.select(*names_from))]
+    elif expand:
+        # each column's (Spark's string, value); a grid key joins the
+        # strings of its non-NULL parts, as concat_ws does
+        per_col = [sorted(_capped_distinct(df.select(F.col(c).cast("string"), c)),
+                          key=lambda r: (r[1] is None, str(r[1])))
                    for c in names_from]
-        rows = [sum(combo, ()) for combo in product(*per_col)]
+        rows = [(names_sep.join(s for s, _p in combo if s is not None),
+                 tuple(p for _s, p in combo))
+                for combo in product(*per_col)]
         if len(rows) > MAX_PIVOT_KEYS:
             raise TranslationError(
                 f"names_expand grid exceeds {MAX_PIVOT_KEYS} keys")
         return rows
-    rows = sorted(_capped_distinct(df.select(*names_from)), key=order)
+    else:
+        rows = [(r[0], r[1:]) for r in _capped_distinct(
+            df.select(F.concat_ws(names_sep, *names_from), *names_from))]
+    rows.sort(key=order)
     if levels is not None:
         pos = {v: i for i, v in enumerate(levels)}
         rows.sort(key=lambda r: (r[0] is None, pos.get(r[0], len(pos)),
@@ -185,53 +185,52 @@ def _wider_rows(df, names_from, names_sep="_", levels=None, expand=False):
 def _wider_spec(rows, values_from, names_prefix="", names_sep="_",
                 names_glue=None, names_vary="fastest"):
     """The internal wide-pivot spec: ``[(output name, value column, key
-    parts)]`` in output-column order, one entry per value column and key
-    row.  Names and order follow ``pivot_wider``'s docstring; every key
-    part is named by ``_key_str``, the name Spark's pivot gives it."""
+    parts, pivot key)]`` in output-column order, one entry per value column
+    and key row of ``_wider_rows``.  Names and order follow
+    ``pivot_wider``'s docstring; keys and glue parts are named by ``_key_str``."""
     many = len(values_from) > 1
 
-    def name(v, parts):
-        strs = [_key_str(p) for p in parts]
+    def name(v, key, parts):
         if names_glue is not None and len(parts) + (1 if many else 0) > 1:
+            strs = [_key_str(p) for p in parts]
             if many:
                 return names_glue.format(variable=v, value=strs[0])
             return names_glue.format(variable=strs[0], value=strs[1])
-        key = _key_str(_pivot_key(parts, names_sep))
-        return f"{names_prefix}{v}{names_sep}{key}" if many \
-            else f"{names_prefix}{key}"
+        return f"{names_prefix}{v}{names_sep}{_key_str(key)}" if many \
+            else f"{names_prefix}{_key_str(key)}"
 
-    pairs = ([(v, p) for v in values_from for p in rows]
+    pairs = ([(v, r) for v in values_from for r in rows]
              if names_vary == "fastest"
-             else [(v, p) for p in rows for v in values_from])
-    return [(name(v, p), v, p) for v, p in pairs]
+             else [(v, r) for r in rows for v in values_from])
+    return [(name(v, k, p), v, p, k) for v, (k, p) in pairs]
 
 
 def _pivot_build(df, ids, names_from, spec, aggs, names_sep="_"):
     """The one wide-pivot builder: ``spec`` becomes ``groupBy(ids).pivot(key,
     keys).agg(...)`` with ``aggs`` (value column → aggregate Column), its
-    columns renamed to the spec's names and selected in spec order.
-    Several names_from columns pivot on their ``concat_ws`` join."""
-    out = [n for n, _v, _p in spec]
+    columns named by the spec and selected in spec order.  Several
+    names_from columns pivot on their ``concat_ws`` join.  Spark emits the
+    pivot columns key-major in ``keys`` order, so they are renamed by
+    position: the names Spark gives them never have to be predicted."""
+    out = [e[0] for e in spec]
     if len(set(out)) != len(out):
         raise ValueError(
             f"pivot_wider output names are not unique: {out} "
             "(names_repair='check_unique', the reference default)")
-    key = names_from[0]
+    col = names_from[0]
     if len(names_from) > 1:
-        key = "__pw_key"
-        df = df.withColumn(key, F.concat_ws(names_sep, *names_from))
-    keys = list(dict.fromkeys(_pivot_key(p, names_sep) for _n, _v, p in spec))
-    df = df.groupBy(*ids).pivot(key, keys).agg(
+        col = "__pw_key"
+        df = df.withColumn(col, F.concat_ws(names_sep, *names_from))
+    keys = {p: k for _n, _v, p, k in spec}  # parts → pivot key
+    df = df.groupBy(*ids).pivot(col, list(keys.values())).agg(
         *[a.alias(v) for v, a in aggs.items()])
-
-    # Spark names a pivot column "<key>", or "<key>_<value>" for several
-    # aggregates
-    def pivoted(v, parts):
-        k = _key_str(_pivot_key(parts, names_sep))
-        return f"{k}_{v}" if len(aggs) > 1 else k
-
-    rename = {pivoted(v, p): n for n, v, p in spec}
-    df = df.withColumnsRenamed({k: n for k, n in rename.items() if k != n})
+    name_of = {(p, v): n for n, v, p, _k in spec}
+    # (key, value) pairs the spec leaves out get a placeholder, unselected
+    names = [name_of.get(pv, f"__pw_{i}")
+             for i, pv in enumerate(product(keys, aggs))]
+    df = df.toDF(*ids, *names)
+    if names == out:
+        return df
     # backtick-escape: ids/keys containing '.' must not parse as struct refs
     return df.select(*[_bq(c) for c in ids + out])
 
@@ -244,12 +243,12 @@ def spread(tbl: SparkTbl, key, value, fill=None, sep: str | None = None,
     valc = _colname(value)
     ids = [c for c in tbl.columns if c not in (keyc, valc)]
     base = tbl.df.persist()
-    spec = [(f"{keyc}{sep}{_key_str(p[0])}" if sep else _key_str(p[0]),
-             valc, p) for p in _wider_rows(base, [keyc])]
+    spec = [(f"{keyc}{sep}{_key_str(k)}" if sep else _key_str(k), valc, p, k)
+            for k, p in _wider_rows(base, [keyc])]
     df = _pivot_build(base, ids, [keyc], spec,
                       {valc: F.first(valc, ignorenulls=True)})
     if fill is not None:
-        df = df.fillna(fill, subset=[n for n, _v, _p in spec])
+        df = df.fillna(fill, subset=[e[0] for e in spec])
     return tbl.evolve(df=df).pin(base)
 
 
@@ -531,7 +530,7 @@ def one_hot(tbl: SparkTbl, col, prefix: str | None = None,
     values get all-zeros like pandas ``dummy_na=False``."""
     name = _colname(col)
     base = tbl.df.persist()
-    keys = [p[0] for p in _wider_rows(base, [name]) if p[0] is not None]
+    keys = [k for k, _p in _wider_rows(base, [name]) if k is not None]
     if drop_first:
         keys = keys[1:]
     pre = f"{prefix}_" if prefix else f"{name}_"
@@ -877,7 +876,7 @@ def pivot_wider(tbl: SparkTbl, id_cols=None, names_from="name",
         df = grid.join(df, ids, "left")
         df = df.orderBy(*ids)
     if values_fill is not None:
-        df = df.fillna(values_fill, subset=[n for n, _v, _p in spec])
+        df = df.fillna(values_fill, subset=[e[0] for e in spec])
     return SparkTbl(df, pins=tbl.pins + (work,))
 
 
@@ -926,7 +925,7 @@ def build_wider_spec(tbl: SparkTbl, names_from="name", values_from="value",
         _wider_rows(tbl.df, names_from, names_sep, _factor_levels(tbl, names_from)),
         values_from, names_prefix, names_sep, names_glue)
     return pd.DataFrame([{".name": n, ".value": v, **dict(zip(names_from, p))}
-                         for n, v, p in spec], dtype=object)
+                         for n, v, p, _k in spec], dtype=object)
 
 
 @verb
@@ -944,13 +943,25 @@ def pivot_wider_spec(tbl: SparkTbl, spec, id_cols=None, values_fill=None,
     ids = _id_cols(tbl, id_cols, names_from, values_from)
     fn_for = _fns_for(values_fn, values_from)
     # a NULL key read back from a numeric frame column is NaN
-    entries = [(r[".name"], r[".value"],
-                tuple(None if pd.isna(r[c]) else r[c] for c in names_from))
-               for r in spec.to_dict("records")]
+    rows = [(r[".name"], r[".value"],
+             tuple(None if pd.isna(r[c]) else r[c] for c in names_from))
+            for r in spec.to_dict("records")]
+    keys = {p: p[0] for _n, _v, p in rows}
+    if len(names_from) > 1:
+        # several names_from columns pivot on their concat_ws string; the
+        # same concat_ws over the parts cast back to their columns' types
+        # is a constant Spark folds while it analyses the pivot: Spark's own
+        # string, and no job (PySpark types pivot values as literals, but
+        # Spark also takes Columns)
+        types = {f.name: f.dataType for f in tbl.df.schema.fields}
+        keys = {p: F.concat_ws(names_sep, *[
+            F.lit(x).cast(types[c]) for c, x in zip(names_from, p)
+            if x is not None])._jc for p in keys}
+    entries = [(n, v, p, keys[p]) for n, v, p in rows]
     df = _pivot_build(tbl.df, ids, names_from, entries,
                       {v: fn_for[v](F.col(v)) for v in values_from}, names_sep)
     if values_fill is not None:
-        df = df.fillna(values_fill, subset=[n for n, _v, _p in entries])
+        df = df.fillna(values_fill, subset=[e[0] for e in entries])
     return SparkTbl(df)
 
 
@@ -979,11 +990,11 @@ def crosstab(tbl: SparkTbl, row, col, values=None, aggfunc: str = "count",
     agg = _agg_fn(aggfunc)(F.col(valc)) if values is not None \
         else F.count(F.lit(1))
     base = tbl.df.persist()
-    spec = [(_key_str(p[0]), valc, p) for p in _wider_rows(base, [colc])
-            if p[0] is not None]
+    spec = [(_key_str(k), valc, p, k) for k, p in _wider_rows(base, [colc])
+            if k is not None]
     df = _pivot_build(base, [rowc], [colc], spec, {valc: agg})
     if fill is not None:
-        df = df.fillna(fill, subset=[n for n, _v, _p in spec])
+        df = df.fillna(fill, subset=[e[0] for e in spec])
     return tbl.evolve(df=df, group_by=()).pin(base)
 
 
@@ -1167,8 +1178,14 @@ def unnest_wider(tbl: SparkTbl, col, names_sep: str | None = None):
         return tbl.evolve(df=tbl.df.select(*others, *new))
     if isinstance(dt, T.MapType):
         # map keys are never NULL and share one type: plain sort
-        keys = sorted(r[0] for r in _capped_distinct(
-            tbl.df.select(F.explode(F.map_keys(F.col(name))))))
+        try:
+            keys = sorted(r[0] for r in _capped_distinct(
+                tbl.df.select(F.explode(F.map_keys(F.col(name))))))
+        except TranslationError:
+            raise ValueError(
+                f"unnest_wider: map column {name!r} has more than "
+                f"{MAX_PIVOT_KEYS} distinct keys — widen explicitly or "
+                "unnest_longer instead") from None
         new = [F.element_at(F.col(name), F.lit(k)).alias(f"{pre}{k}")
                for k in keys]
         return tbl.evolve(df=tbl.df.select(*others, *new))

@@ -283,6 +283,20 @@ def test_build_wider_spec_and_pivot_wider_spec(spark):
     assert direct.columns == ["id", "x", "x_u", "y_u"]
     assert via_spec.columns == direct.columns
     assert sorted(via_spec.collect()) == sorted(direct.collect())
+    # a two-column key is the string Spark's concat_ws makes, which for a
+    # float32 part or a part of 1e7 is not Python's str() of it
+    t = data_frame(spark, id=[1, 1, 2], a=[1.1, 1e7, 1.1],
+                   b=["u", "u", "w"], v=[10, 20, 30])
+    for a_type in ("float", "double"):
+        t2 = tbl(t.df.withColumn("a", t.df["a"].cast(a_type)))
+        direct = (t2 >> pivot_wider(names_from=["a", "b"], values_from=_.v)).df
+        spec = build_wider_spec(t2, names_from=["a", "b"], values_from="v")
+        via_spec = (t2 >> pivot_wider_spec(spec)).df
+        assert direct.columns == ["id", "1.0E7_u", "1.1_u", "1.1_w"]
+        assert [tuple(r) for r in sorted(direct.collect())] == \
+            [(1, 20, 10, None), (2, None, None, 30)]
+        assert via_spec.columns == direct.columns
+        assert sorted(via_spec.collect()) == sorted(direct.collect())
 
 
 def test_pivot_longer_names_transform(spark):
